@@ -30,13 +30,20 @@ entropy-coded JPEG. The decoder builds its Huffman tables from the
 file's DHT, so any well-formed baseline grayscale JPEG decodes, not
 just our fixtures.
 
-Performance note: entropy decode is inherently bit-serial; the decoder
-keeps it tractable the way real decoders do — a 16-bit-lookahead
-Huffman LUT (one table index per SYMBOL, not per bit) over an integer
-bit accumulator, with the stuffed-byte scan and all DCT/dequant math
-vectorized in numpy. The encoder walks only the NONZERO coefficients
-per block (flatnonzero), so mostly-white page blocks cost O(1). The
-extraction pipeline's media decode runs inside Arrow-batched
+Performance note: entropy decode is inherently bit-serial, so the
+decoder keeps only the part that must be serial in Python. Each DHT
+table becomes two numpy LUTs over the 16-bit window (memoized per
+table): a step (code plus value length; for AC packed with the
+k-increment) and the symbol. The step LUT is applied at EVERY bit
+position of the stream at once, so one pointer-chase loop per symbol
+does ``pos += tot`` / ``k += kinc`` and records positions; symbol
+values, zigzag indices and the block-overrun check are then computed
+vectorized at the recorded positions and scattered, dequantized, into
+the coefficient plane in one store. The stuffed-byte scan is a
+``flatnonzero`` classification, and the IDCT is a separable matmul
+(``C.T @ X @ C``) over all blocks. The encoder walks only the NONZERO
+coefficients per block (flatnonzero), so mostly-white page blocks cost
+O(1). The extraction pipeline's media decode runs inside Arrow-batched
 ``mapInPandas`` workers, so per-image Python here parallelizes across
 the cluster exactly like the PNG/PDF paths.
 """
@@ -44,6 +51,7 @@ the cluster exactly like the PNG/PDF paths.
 from __future__ import annotations
 
 import struct
+from array import array
 from functools import lru_cache
 
 import numpy as np
@@ -253,69 +261,206 @@ def _unstuff(data: bytes) -> bytes:
     immediately before the EOI are spec-legal optional fill
     (T.81 B.1.1.2 — real encoders emit them) and are excluded from the
     entropy data; any other marker is outside the subset (RSTn) or
-    malformed. Vectorized — one numpy scan instead of a per-byte
-    Python loop."""
+    malformed. Vectorized: every 0xFF is classified at once, and the
+    first one that is neither stuffing nor followed by another 0xFF
+    decides."""
     buf = np.frombuffer(data, dtype=np.uint8)
     ff = np.flatnonzero(buf == 0xFF)
-    end = len(buf)
-    run_start = -1  # start of a pending 0xFF fill run
-    prev_ff = -2
-    for i in ff:
-        if i + 1 >= len(buf):
-            raise JpegError("entropy stream truncated at 0xFF")
-        nxt = buf[i + 1]
-        in_run = run_start >= 0 and i == prev_ff + 1
-        if nxt == 0xFF:
-            # candidate fill byte — only legal if the run terminates in
-            # a marker; decided when the run's last 0xFF is reached
-            if not in_run:
-                run_start = int(i)
-            prev_ff = int(i)
-            continue
-        if nxt == 0x00:
-            if in_run:
-                raise JpegError("0xFF fill bytes before non-marker data")
-            run_start = -1
-            continue
-        if nxt == 0xD9:  # EOI; exclude any preceding fill run
-            end = run_start if in_run else int(i)
-            break
-        if 0xD0 <= nxt <= 0xD7:
-            raise JpegError("restart markers (DRI/RSTn) outside subset")
-        raise JpegError("unexpected marker inside entropy data")
-    return data[:end].replace(b"\xff\x00", b"\xff")
+    if not len(ff):
+        return data
+    nxt = buf[np.minimum(ff + 1, len(buf) - 1)]
+    after_ff = np.zeros(len(ff), dtype=bool)  # preceded by a 0xFF
+    after_ff[1:] = ff[1:] == ff[:-1] + 1
+    ok = (nxt == 0xFF) | ((nxt == 0x00) & ~after_ff)
+    if ff[-1] == len(buf) - 1:
+        ok[-1] = False
+    if ok.all():
+        return data.replace(b"\xff\x00", b"\xff")
+    first = int(np.argmin(ok))
+    i = int(ff[first])
+    if i + 1 >= len(buf):
+        raise JpegError("entropy stream truncated at 0xFF")
+    nxt_byte = buf[i + 1]
+    if nxt_byte == 0xD9:  # EOI; exclude the 0xFF fill run ending here
+        run_start = np.flatnonzero(~after_ff[: first + 1])[-1]
+        return data[: int(ff[run_start])].replace(b"\xff\x00", b"\xff")
+    if nxt_byte == 0x00:
+        raise JpegError("0xFF fill bytes before non-marker data")
+    if 0xD0 <= nxt_byte <= 0xD7:
+        raise JpegError("restart markers (DRI/RSTn) outside subset")
+    raise JpegError("unexpected marker inside entropy data")
 
 
 @lru_cache(maxsize=32)
-def _lookup16(table_bits: tuple, table_vals: tuple):
-    """16-bit-lookahead Huffman LUT: two 65536-entry Python lists
-    (symbol, code length) — ONE list index per decoded symbol. The
-    canonical-code property guarantees every 16-bit window whose
-    prefix is a valid code maps to exactly one symbol. Memoized on the
+def _lookup16(table_bits: tuple, table_vals: tuple, ac: bool):
+    """16-bit-window Huffman LUTs for one DHT table, built in numpy:
+    ``step`` is the symbol's code length plus its value-bit count (for
+    AC packed with the k-increment as ``tot | kinc << 8``; kinc is
+    run+1, 16 for ZRL and 64 for EOB) and ``sym`` is the symbol. A
+    step of 0 marks an invalid code: no code matches the window, a DC
+    size above 11, or an AC symbol of size 0 other than EOB and ZRL.
+    Canonical codes tile the window space from 0 upward in code order,
+    so each table is one ``np.repeat``; a symbol listed twice keeps
+    only its last code, as in ``_canonical_codes``. Memoized on the
     table contents: virtually every file ships the standard Annex-K
-    tables, so the ~260k LUT writes are paid once per worker, not per
-    image (review finding). Callers must not mutate the lists."""
-    syms = [-1] * 65536
-    lens = [0] * 65536
-    for sym, (code, length) in _canonical_codes(table_bits, table_vals).items():
-        base = code << (16 - length)
-        for i in range(1 << (16 - length)):
-            syms[base + i] = sym
-            lens[base + i] = length
-    return syms, lens
+    tables. The arrays are shared, so they are read-only. The table
+    must have passed ``_canonical_codes`` (``_parse`` checks it)."""
+    lens = np.repeat(np.arange(1, 17), table_bits)
+    syms = np.array(table_vals, dtype=np.int64)
+    last = {v: i for i, v in enumerate(table_vals)}
+    kept = np.array([last[v] == i for i, v in enumerate(table_vals)], dtype=bool)
+    if ac:
+        size = syms & 0x0F
+        kinc = np.where(size > 0, (syms >> 4) + 1, 0)
+        kinc[syms == 0x00] = 64  # EOB
+        kinc[syms == 0xF0] = 16  # ZRL
+        step = np.where(kinc > 0, (lens + size) | (kinc << 8), 0)
+    else:
+        step = np.where(syms <= 11, lens + syms, 0)
+    width = 1 << (16 - lens)
+    covered = int(width.sum())
+    step_lut = np.zeros(65536, dtype=np.int16 if ac else np.uint8)
+    step_lut[:covered] = np.repeat(np.where(kept, step, 0), width)
+    sym_lut = np.zeros(65536, dtype=np.uint8)
+    sym_lut[:covered] = np.repeat(syms, width)
+    step_lut.flags.writeable = sym_lut.flags.writeable = False
+    return step_lut, sym_lut
 
 
-def _extend(bits: int, s: int) -> int:
-    if s == 0:
-        return 0
-    return bits if bits >= (1 << (s - 1)) else bits - (1 << s) + 1
+# The most bits one block can take: a DC symbol (16-bit code, size up
+# to 11) and 63 AC symbols (16-bit code, size up to 15).
+_MAX_BLOCK_BITS = (16 + 11) + 63 * (16 + 15)
 
 
-def decode_gray(data: bytes) -> np.ndarray:
-    """Decode a baseline grayscale JPEG to HxW uint8. Progressive,
-    multi-component, subsampled, 16-bit-DQT, arithmetic-coded, and
-    restart-interval files raise :class:`JpegError`."""
-    data = bytes(data)
+def _entropy_decode(ent: bytes, nblocks: int, dc_tab, ac_tab, quant) -> np.ndarray:
+    """Huffman-decode ``nblocks`` blocks into dequantized coefficients,
+    shape (nblocks, 64) in natural (row-major) order.
+
+    The DC and AC ``step`` LUTs are first applied to the 16-bit window
+    at EVERY bit position of the stream, zeroing steps that would end
+    past it. A Python loop then only follows ``pos += tot`` and
+    ``k += kinc`` and records where each symbol starts; values, k
+    indices and the "AC run past block end" check are computed in
+    numpy at the recorded positions.
+
+    Memory: the position tables are uint8 (DC) and int16 (AC), 24
+    bytes per entropy byte, plus 8 for the int64 array of 40-bit
+    windows; the numpy pass then costs a few dozen bytes per recorded
+    symbol. With the Annex-K tables a symbol takes at least 3 bits (2
+    for a zero DC difference), and the transient peak stays under 160
+    bytes per entropy byte (measured 50-140) on top of the
+    8-byte-per-pixel coefficient plane. Only the entropy bytes that
+    ``nblocks`` blocks can consume are tabled (``_MAX_BLOCK_BITS``
+    each, plus the 32-bit window), so trailing data past them, however
+    long, costs nothing here.
+    """
+    dc_step, dc_sym = dc_tab
+    ac_step, ac_sym = ac_tab
+    # every symbol the loop reaches, and the window read at it, lies in
+    # this prefix, so the cut changes neither values nor refusals
+    ent = ent[: (nblocks * _MAX_BLOCK_BITS + 7) // 8 + 4]
+    nbytes = len(ent)
+    nbits = nbytes * 8
+    byte = np.frombuffer(ent, dtype=np.uint8).astype(np.int64)
+    t40 = byte << 32  # the 40 bits from each byte on, zero past the end
+    for i in range(1, 5):
+        t40[:-i] |= byte[i:] << (32 - 8 * i)
+    del byte
+    dc_at = np.zeros(nbits + 1, dtype=np.uint8)
+    ac_at = np.zeros(nbits + 1, dtype=np.int16)
+    for off in range(8):
+        win = (t40 >> (24 - off)) & 0xFFFF
+        dc_at[off:nbits:8] = dc_step[win]
+        ac_at[off:nbits:8] = ac_step[win]
+    del win
+    # near the end the window is zero-padded: a symbol must end inside
+    tail = np.arange(max(nbits - 32, 0), nbits)
+    dc_at[tail[tail + dc_at[tail] > nbits]] = 0
+    ac_at[tail[tail + (ac_at[tail] & 0xFF) > nbits]] = 0
+
+    dc_mv = memoryview(dc_at)
+    ac_mv = memoryview(ac_at)
+    dcs = array("q")  # bit position of each block's DC symbol
+    starts = array("q")  # index into acs of each block's first AC symbol
+    acs = array("q")  # bit position of each AC symbol
+    put_dc, put_start, put_ac = dcs.append, starts.append, acs.append
+    pos = 0
+    for _ in range(nblocks):
+        t = dc_mv[pos]
+        if not t:
+            raise JpegError("invalid DC Huffman code or truncated entropy stream")
+        put_dc(pos)
+        put_start(len(acs))
+        pos += t
+        k = 1
+        while k < 64:
+            a = ac_mv[pos]
+            if not a:
+                raise JpegError("invalid AC Huffman code or truncated entropy stream")
+            put_ac(pos)
+            pos += a & 0xFF
+            k += a >> 8
+    del dc_mv, ac_mv
+
+    coefs = np.zeros((nblocks, 64), dtype=np.float64)
+    if not nblocks:
+        return coefs
+
+    def symbols(at: np.ndarray, sym_lut: np.ndarray, pos: np.ndarray):
+        # (step, symbol, 32-bit window) of the symbols starting at pos;
+        # code and value bits (at most 16 + 15) fit in the window
+        w32 = t40[pos >> 3]
+        w32 >>= 8 - (pos & 7)
+        w32 &= 0xFFFFFFFF
+        return at[pos], sym_lut[w32 >> 16], w32
+
+    def values(w32: np.ndarray, tot: np.ndarray, size: np.ndarray):
+        # the `size` value bits after each code, signed by T.81 EXTEND
+        mask = (1 << size.astype(np.int64)) - 1
+        bits = (w32 >> (32 - tot)) & mask
+        bits -= np.where(bits <= mask >> 1, mask, 0)
+        return bits
+
+    tot, size, w32 = symbols(dc_at, dc_sym, np.frombuffer(dcs, dtype=np.int64))
+    coefs[:, 0] = np.cumsum(values(w32, tot, size)) * quant[0]  # DC diffs
+    ac_pos = np.frombuffer(acs, dtype=np.int64)
+    step, rs, w32 = symbols(ac_at, ac_sym, ac_pos)
+    del t40, dc_at, ac_at, ac_pos
+    coef = np.flatnonzero(rs & 0x0F)  # not EOB/ZRL
+    # k after each AC symbol is 1 + the block's k-increments so far
+    start = np.frombuffer(starts, dtype=np.int64)
+    k_cum = np.zeros(len(acs) + 1, dtype=np.int64)
+    np.cumsum(step >> 8, out=k_cum[1:])
+    block = np.repeat(np.arange(nblocks), np.diff(start, append=len(acs)))[coef]
+    zz = k_cum[1:][coef] - k_cum[start][block]  # k - 1
+    del k_cum, acs
+    if zz.size and zz.max() > 63:
+        raise JpegError("AC run past block end")
+    val = values(w32[coef], step[coef] & 0xFF, rs[coef] & 0x0F)
+    del w32, step, rs
+    coefs.reshape(-1)[block * 64 + _ZIGZAG[zz]] = val * quant[zz]
+    return coefs
+
+
+def _idct_pixels(coefs: np.ndarray, bh: int, bw: int, h: int, w: int) -> np.ndarray:
+    """Dequantized coefficient blocks (bh*bw, 64) -> cropped HxW uint8.
+    Level shift, rounding and clipping run in place on the float
+    blocks; only the uint8 result is laid out as an image. Transient
+    memory is 24 bytes per pixel: the coefficient plane, one matmul
+    temporary and the float pixels."""
+    pix = _C.T @ coefs.reshape(bh, bw, 8, 8) @ _C
+    pix += 128.0
+    np.round(pix, out=pix)
+    np.clip(pix, 0, 255, out=pix)
+    img = pix.astype(np.uint8).transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8)
+    return img[:h, :w]
+
+
+def _parse(data: bytes):
+    """Read the segments up to SOS -> (h, w, quant, DC table, AC table,
+    entropy start), where quant is the zigzag-order quantization table
+    and each table is its DHT (bits, values); every outside-subset or
+    malformed header raises :class:`JpegError`."""
     if len(data) < 4 or data[:2] != b"\xff\xd8":
         raise JpegError("not a JPEG (missing SOI)")
     pos = 2
@@ -395,117 +540,21 @@ def decode_gray(data: bytes) -> np.ndarray:
         raise JpegError("missing quantization table")
     if (0, comp_dc) not in huff or (1, comp_ac) not in huff:
         raise JpegError("missing Huffman tables")
+    return h, w, qtabs[comp_q], huff[(0, comp_dc)], huff[(1, comp_ac)], scan_start
 
-    qtab = qtabs[comp_q][np.argsort(_ZIGZAG)].reshape(8, 8).astype(np.float64)
-    dc_syms, dc_lens = _lookup16(*huff[(0, comp_dc)])
-    ac_syms, ac_lens = _lookup16(*huff[(1, comp_ac)])
+
+def decode_gray(data: bytes) -> np.ndarray:
+    """Decode a baseline grayscale JPEG to HxW uint8. Progressive,
+    multi-component, subsampled, 16-bit-DQT, arithmetic-coded, and
+    restart-interval files raise :class:`JpegError`."""
+    data = bytes(data)
+    h, w, quant, dc_huff, ac_huff, scan_start = _parse(data)
     bh, bw = -(-h // 8), -(-w // 8)
-
-    # integer bit accumulator over the unstuffed entropy bytes; the
-    # Huffman LUT peeks a 16-bit window (zero-padded past stream end —
-    # a fake code assembled from padding fails the consume check)
-    ent = _unstuff(data[scan_start:])
-    nbytes = len(ent)
-    total_bits = nbytes * 8
-    acc = 0
-    have = 0
-    ptr = 0
-    pos = 0
-    # Entropy decode accumulates (flat index, value) into Python lists
-    # and scatters into the coefficient plane ONCE at the end: a numpy
-    # scalar store per symbol (zz_all[bi][k] = v) costs ~10x a list
-    # append, and most coefficients are zero anyway (the encoder's
-    # flatnonzero walk is the mirror image). _extend() is inlined —
-    # one function call per symbol was ~15% of the loop.
-    idxs: list[int] = []
-    vals: list[int] = []
-    prev_dc = 0
-    for base in range(0, bh * bw * 64, 64):
-        # --- DC symbol
-        while have < 16 and ptr < nbytes:
-            acc = (acc << 8) | ent[ptr]
-            ptr += 1
-            have += 8
-        w16 = (
-            (acc >> (have - 16)) & 0xFFFF
-            if have >= 16
-            else (acc << (16 - have)) & 0xFFFF
-        )
-        s = dc_syms[w16]
-        if s < 0 or s > 11:
-            raise JpegError("invalid DC Huffman code")
-        length = dc_lens[w16]
-        if pos + length + s > total_bits:
-            raise JpegError("entropy stream truncated")
-        have -= length
-        pos += length
-        if s:
-            while have < s:
-                acc = (acc << 8) | ent[ptr]
-                ptr += 1
-                have += 8
-            bits = (acc >> (have - s)) & ((1 << s) - 1)
-            prev_dc += (
-                bits if bits >= (1 << (s - 1)) else bits - (1 << s) + 1
-            )
-            have -= s
-            pos += s
-        acc &= (1 << have) - 1
-        idxs.append(base)
-        vals.append(prev_dc)
-        # --- AC symbols
-        k = 1
-        while k < 64:
-            while have < 16 and ptr < nbytes:
-                acc = (acc << 8) | ent[ptr]
-                ptr += 1
-                have += 8
-            w16 = (
-                (acc >> (have - 16)) & 0xFFFF
-                if have >= 16
-                else (acc << (16 - have)) & 0xFFFF
-            )
-            rs = ac_syms[w16]
-            if rs < 0:
-                raise JpegError("invalid AC Huffman code")
-            length = ac_lens[w16]
-            s = rs & 0x0F
-            if pos + length + s > total_bits:
-                raise JpegError("entropy stream truncated")
-            have -= length
-            pos += length
-            if rs == 0x00:  # EOB
-                acc &= (1 << have) - 1
-                break
-            if rs == 0xF0:  # ZRL
-                acc &= (1 << have) - 1
-                k += 16
-                continue
-            k += rs >> 4
-            if k > 63:
-                raise JpegError("AC run past block end")
-            while have < s:
-                acc = (acc << 8) | ent[ptr]
-                ptr += 1
-                have += 8
-            bits = (acc >> (have - s)) & ((1 << s) - 1)
-            idxs.append(base + k)
-            vals.append(
-                bits if bits >= (1 << (s - 1)) else bits - (1 << s) + 1
-            )
-            have -= s
-            pos += s
-            acc &= (1 << have) - 1
-            k += 1
-    zz_all = np.zeros(bh * bw * 64, dtype=np.int64)
-    if idxs:
-        zz_all[np.array(idxs, dtype=np.int64)] = np.array(
-            vals, dtype=np.int64
-        )
-    zz_all = zz_all.reshape(bh * bw, 64)
-    blocks = np.zeros((bh * bw, 64), dtype=np.float64)
-    blocks[:, _ZIGZAG] = zz_all
-    out_coefs = blocks.reshape(bh, bw, 8, 8) * qtab
-    pix = np.einsum("ji,abjk,kl->abil", _C, out_coefs, _C)
-    img = pix.transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8) + 128.0
-    return np.clip(np.round(img), 0, 255).astype(np.uint8)[:h, :w]
+    coefs = _entropy_decode(
+        _unstuff(data[scan_start:]),
+        bh * bw,
+        _lookup16(*dc_huff, False),
+        _lookup16(*ac_huff, True),
+        quant,
+    )
+    return _idct_pixels(coefs, bh, bw, h, w)

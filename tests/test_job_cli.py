@@ -83,28 +83,49 @@ def test_media_cache_released(spark, docs_df, media_df):
     from pero_ocr_api_spark.plans.extract import release_run
 
     jsc = spark.sparkContext._jsc
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
 
-    def n_persisted():
-        return jsc.getPersistentRDDs().size()
+    def persisted():
+        return set(jsc.getPersistentRDDs().keys())
+
+    def cache_id(df):
+        cached = cache_manager.lookupCachedData(df._jdf).get()
+        return cached.cachedRepresentation().cacheBuilder().cachedColumnBuffers().id()
 
     # materialize the (cached) corpus fixtures first so their cache
     # registration doesn't move the baseline mid-test
     docs_df.count()
     media_df.count()
-    base = n_persisted()
+    fixtures = {cache_id(docs_df), cache_id(media_df)}
+    snapshot = jsc.getPersistentRDDs()
+    base = set(snapshot.keys())
+    # localCheckpoint RDDs of earlier tests are unpersisted whenever the
+    # JVM collects their garbage, which can happen mid-test (see
+    # test_release_query_caches); every other cache must survive
+    must_stay = {i for i in base if not snapshot.get(i).rdd().isLocallyCheckpointed()}
+    assert fixtures <= must_stay
+
+    def assert_released(n_new):
+        now = persisted()
+        # RDD ids are never reused, so a cache left behind is a new id
+        assert len(now - base) == n_new
+        # ... and a cache released by mistake is a missing old id
+        assert must_stay <= now
+        assert docs_df.storageLevel.useMemory and media_df.storageLevel.useMemory
+
     for i in range(3):
         rows, lineage = run_extract(spark, docs_df, media_df, run_id=f"rel{i}")
         rows.count()
         lineage.count()
         release_run(f"rel{i}")
-    assert n_persisted() == base
+    assert_released(0)
     # same run_id twice: old cache replaced, exactly one extra entry
     for _ in range(2):
         rows, _ = run_extract(spark, docs_df, media_df, run_id="rel_same")
         rows.count()
-    assert n_persisted() == base + 1
+    assert_released(1)
     release_run("rel_same")
-    assert n_persisted() == base
+    assert_released(0)
 
 
 def test_job_cli_end_to_end(spark):

@@ -324,3 +324,59 @@ def test_fill_bytes_before_data_still_rejected():
     bad = enc[: i - 4] + b"\xff\xff\x00" + enc[i - 4 :]
     with pytest.raises(jpeg.JpegError):
         jpeg.decode_gray(bad)
+
+
+def _jpeg_with_ac_table(ac_bits, ac_vals, entropy: bytes) -> bytes:
+    """An 8x8 baseline JPEG whose AC Huffman table and entropy data are
+    replaced (the DC table stays Annex K, where '00' codes a zero
+    difference)."""
+    base = jpeg.encode_gray(np.zeros((8, 8), np.uint8))
+    ac_dht = base.index(b"\xff\xc4", base.index(b"\xff\xc4") + 2)
+    sos = base.index(b"\xff\xda")
+    payload = bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals)
+    seg = b"\xff\xc4" + (len(payload) + 2).to_bytes(2, "big") + payload
+    return base[:ac_dht] + seg + base[sos : sos + 10] + entropy + b"\xff\xd9"
+
+
+def _dct_pdf(payload: bytes, w: int, h: int) -> bytes:
+    return pdf._assemble_pdf(
+        [
+            b"<< /Type /Catalog /Pages 2 0 R >>",
+            b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 %d %d] "
+            b"/Contents 4 0 R /Resources << /XObject << /Im1 5 0 R >> >> >>"
+            % (w, h),
+            b"<< /Length 24 >>\nstream\nq 8 0 0 8 0 0 cm /Im1 Do Q\nendstream",
+            b"<< /Type /XObject /Subtype /Image /Width %d /Height %d "
+            b"/ColorSpace /DeviceGray /BitsPerComponent 8 "
+            b"/Filter /DCTDecode /Length %d >>\nstream\n%s\nendstream"
+            % (w, h, len(payload), payload),
+        ]
+    )
+
+
+# AC table of two 1-bit codes: '0' = EOB, '1' = 0x10 (run 1, size 0 —
+# neither EOB nor ZRL, so it codes no value and is invalid)
+_SIZE0_BITS = [2] + [0] * 15
+_SIZE0_VALS = [0x00, 0x10]
+
+
+def test_ac_symbol_of_size_zero_raises_jpeg_error():
+    """An AC symbol with size 0 other than EOB/ZRL used to reach
+    ``1 << (s - 1)`` and leak a ValueError; it is a typed refusal."""
+    # '00' DC 0, '0' EOB, '1' padding -> decodes to a flat mid-gray block
+    ok = _jpeg_with_ac_table(_SIZE0_BITS, _SIZE0_VALS, bytes([0b00011111]))
+    assert np.array_equal(jpeg.decode_gray(ok), np.full((8, 8), 128, np.uint8))
+    # '00' DC 0, '1' the size-0 symbol 0x10
+    bad = _jpeg_with_ac_table(_SIZE0_BITS, _SIZE0_VALS, bytes([0b00111111]))
+    with pytest.raises(jpeg.JpegError):
+        jpeg.decode_gray(bad)
+
+
+def test_scanned_pdf_with_size_zero_ac_symbol_raises_pdferror():
+    bad = _jpeg_with_ac_table(_SIZE0_BITS, _SIZE0_VALS, bytes([0b00111111]))
+    with pytest.raises(pdf.PdfError):
+        pdf.extract_page_images(_dct_pdf(bad, 8, 8))
+    ok = _jpeg_with_ac_table(_SIZE0_BITS, _SIZE0_VALS, bytes([0b00011111]))
+    [img] = pdf.extract_page_images(_dct_pdf(ok, 8, 8))
+    assert img.shape == (8, 8)
