@@ -5,15 +5,15 @@ aggregate* — never by relying on shuffle arrival order. This produces
 the per-row invariant: span-sequence equality ``(kind, text,
 media_ref, order)``.
 
-Scale design: a media-heavy document (FIXTURES §1: 20-50+ spans, at
-100 TB potentially thousands) is a skewed group for
-``groupBy(doc_id)``. The aggregation therefore runs in two levels —
-partial collect per ``(doc_id, salt)`` where ``salt =
-pmod(hash(offset), salt_buckets)``, then a final merge per ``doc_id``
-— so no single reducer receives one giant unsplittable group
-(map-side partials spread over ``salt_buckets`` reducers). The final
-merge handles only pre-bundled arrays. ``salt_buckets=1`` degenerates
-to a plain one-level groupBy for tiny inputs.
+Scale design: one ``groupBy(doc_id)``, one exchange. The map-side
+partial aggregate already bundles each document's spans per map task,
+so a media-heavy document (FIXTURES §1: 20-50+ spans, at 100 TB
+potentially thousands) reaches its reducer as one pre-collected array
+per map task. A second, salted ``(doc_id, salt)`` level would add an
+exchange and a Spark job without shrinking what that reducer receives:
+one document is one output row either way. The expensive per-span work
+is spread before this point, where the media UDF stage hashes on the
+unique ``media_ref`` (plans/extract.py).
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ SPAN_COLS = (
 )
 
 
-def restitch(span_rows: DataFrame, salt_buckets: int = 16) -> DataFrame:
+def restitch(span_rows: DataFrame) -> DataFrame:
     """Aggregate processed span rows into `extracted` documents."""
     span_struct = F.struct("offset", "kind", "text", "media_ref")
     fail_struct = F.when(
@@ -49,24 +49,11 @@ def restitch(span_rows: DataFrame, salt_buckets: int = 16) -> DataFrame:
         F.struct("offset", "alto_xml", "page_xml", "txt"),
     )
 
-    partial = (
-        span_rows.groupBy(
-            "doc_id",
-            F.pmod(F.hash("offset"), F.lit(salt_buckets)).alias("_salt"),
-        )
-        .agg(
-            F.collect_list(span_struct).alias("p_spans"),
-            F.collect_list(fail_struct).alias("p_fails"),
-            F.collect_list(export_struct).alias("p_exports"),
-            F.flatten(F.collect_list("confs")).alias("p_confs"),
-        )
-    )
-
-    merged = partial.groupBy("doc_id").agg(
-        F.array_sort(F.flatten(F.collect_list("p_spans"))).alias("o_spans"),
-        F.array_sort(F.flatten(F.collect_list("p_fails"))).alias("o_fails"),
-        F.array_sort(F.flatten(F.collect_list("p_exports"))).alias("o_exports"),
-        F.array_sort(F.flatten(F.collect_list("p_confs"))).alias("o_confs"),
+    merged = span_rows.groupBy("doc_id").agg(
+        F.array_sort(F.collect_list(span_struct)).alias("o_spans"),
+        F.array_sort(F.collect_list(fail_struct)).alias("o_fails"),
+        F.array_sort(F.collect_list(export_struct)).alias("o_exports"),
+        F.array_sort(F.flatten(F.collect_list("confs"))).alias("o_confs"),
     )
 
     n = F.size("o_confs")

@@ -11,7 +11,7 @@ loop (``routes.py:39-59`` → ``general.py:112-151`` →
                                 │   media_ref → mapInPandas OCR kernel
                                 │   (Arrow batches, per-doc failure
                                 │   capture — U4 semantics)
-                                └─ union → restitch (X10, salted) →
+                                └─ union → restitch (X10) →
                                     `extracted` (+ per-partition
                                     lineage rows)
 
@@ -23,7 +23,8 @@ Scale notes (designed for 10^12 docs / 100 TB, tested at local[32]):
   (Repartitioning by ``doc_id`` *before* the UDF would concentrate a
   heavy doc on one executor — deliberately avoided; doc locality is
   only needed at the stitch, where rows are already small.)
-* The stitch groupBy is two-level salted (operators/restitch.py).
+* The stitch is one ``groupBy(doc_id)`` over map-side partial
+  aggregates — one exchange (operators/restitch.py).
 * Text path never leaves the JVM; only media rows pay the Arrow hop.
 * Resume (U6/watchdog analog): ``resume_from`` anti-joins already-
   extracted doc_ids, so a rerun after failure is incremental and
@@ -208,26 +209,24 @@ def media_path(
     (unique) → perfectly uniform spread regardless of doc skew."""
     cfg = {**kernel.DEFAULT_CONFIG, **(config or {})}
     if udf_partitions is None:
-        # one partition per core: per-task Python round-trips carry a
-        # fixed cost, so bigger partitions beat finer ones as long as
-        # rows-per-partition stays balanced (media_ref is unique)
         udf_partitions = spans.sparkSession.sparkContext.defaultParallelism
-    # Pre-partition BOTH join inputs on (media_ref, udf_partitions):
-    # the join then preserves that partitioning (no second exchange),
-    # so the heavy blobs cross the wire exactly once — vs joining
-    # first and repartitioning after, which shuffles every blob twice.
-    # The explicit partition count also keeps AQE from byte-coalescing
-    # the compute-bound UDF stage down to one task. On Iceberg the
-    # media table would be bucketed by media_ref, removing even this
-    # single blob shuffle.
+    # Only the refs side is repartitioned on media_ref (unique, so rows
+    # spread evenly whatever the doc skew); the explicit count keeps
+    # AQE from byte-coalescing the compute-bound UDF stage down to one
+    # task. The blob side is left to the planner, so each blob moves
+    # once: a small media table is broadcast into the refs partitions
+    # (udf_partitions UDF tasks), and a large one takes a sort-merge
+    # join, where EnsureRequirements shuffles the blobs by
+    # hashpartitioning(media_ref, spark.sql.shuffle.partitions) and
+    # raises the refs side to that count, which then sets the number of
+    # UDF tasks. On Iceberg the media table would be bucketed by
+    # media_ref, removing even that blob shuffle.
     refs = (
         spans.filter(F.col("kind") == "media")
         .select("doc_id", "offset", "media_ref")
         .repartition(udf_partitions, "media_ref")
     )
-    blobs = media.select("media_ref", "media_kind", "media_bytes").repartition(
-        udf_partitions, "media_ref"
-    )
+    blobs = media.select("media_ref", "media_kind", "media_bytes")
     joined = refs.join(blobs, "media_ref", "left").select(
         "doc_id", "offset", "media_ref", "media_kind", "media_bytes"
     )
@@ -268,7 +267,6 @@ def run_extract(
     config: dict[str, Any] | None = None,
     run_id: str = "run0",
     resume_from: DataFrame | None = None,
-    salt_buckets: int = 16,
     udf_partitions: int | None = None,
     engine=None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -294,5 +292,5 @@ def run_extract(
     t_rows = text_path(spans, engine)
     m_rows, lineage = media_path(spans, media, config, run_id, udf_partitions)
     m_rows = m_rows.withColumn("kind", F.lit("media"))
-    extracted = restitch(t_rows.unionByName(m_rows), salt_buckets=salt_buckets)
+    extracted = restitch(t_rows.unionByName(m_rows))
     return extracted, lineage

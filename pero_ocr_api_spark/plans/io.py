@@ -17,8 +17,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401  (kept for callers)
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
@@ -59,7 +59,14 @@ def write_extracted(
     against rows already in the *target* — without the source dedupe
     they would land twice. The Iceberg temp view gets a unique
     per-call name so two concurrent ``write_extracted`` calls in one
-    SparkSession cannot race on it."""
+    SparkSession cannot race on it.
+
+    The parquet branch writes the new rows in one pass and counts them
+    with an :class:`~pyspark.sql.Observation` on that same write, so
+    the batch is neither computed twice nor held in memory. The write
+    runs even when no row is new: such a batch (a full resume, a
+    re-write of rows already present) may add a schema-only parquet
+    file to `path`, which readers see as zero rows."""
     extracted = extracted.dropDuplicates(["doc_id"])
     if table_format == "iceberg":
         import uuid
@@ -82,12 +89,11 @@ def write_extracted(
     new_rows = (
         extracted if done is None else extracted.join(done, "doc_id", "left_anti")
     )
-    new_rows = new_rows.cache()
-    n = new_rows.count()
-    if n:
-        new_rows.write.mode("append").parquet(path)
-    new_rows.unpersist()
-    return n
+    obs = Observation()
+    new_rows.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        "append"
+    ).parquet(path)
+    return obs.get["rows"]
 
 
 def write_extracted_bucketed(

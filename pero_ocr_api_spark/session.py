@@ -5,13 +5,13 @@ Scale design (local[32] sandbox stands in for a 1000-executor cluster):
 * AQE on — runtime coalescing of shuffle partitions, skew-join
   splitting.  At 100 TB the media stage is the skew hazard (media-heavy
   documents), so ``spark.sql.adaptive.skewJoin`` stays enabled and the
-  extract plan additionally salts media-heavy docs explicitly.
+  extract plan spreads the OCR work over the unique ``media_ref``.
 * Arrow on — every Python-side kernel is an Arrow-batched pandas UDF;
   ``maxRecordsPerBatch`` is kept small for the media stage because each
   record can carry a multi-megapixel decoded page.
-* ``spark.sql.shuffle.partitions`` defaults to the local core count;
-  a real cluster run would set it to ~2-3x total executor cores and let
-  AQE coalesce.
+* ``spark.sql.shuffle.partitions`` defaults to the local core count,
+  but never below 8 (``max(cores, 8)``); a real cluster run would set
+  it to ~2-3x total executor cores and let AQE coalesce.
 * ``spark.driver.memory`` defaults to a share of the machine's physical
   memory (``SPARK_DRIVER_MEM`` overrides it), never a fixed size that
   may exceed it.

@@ -13,7 +13,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from pero_ocr_api_spark.plans.extract import run_extract
+from pero_ocr_api_spark.plans.extract import release_run, run_extract
 from pero_ocr_api_spark.plans.io import write_extracted
 
 
@@ -22,8 +22,10 @@ def test_write_extracted_idempotent(spark, docs_df, media_df):
     first, _ = run_extract(spark, docs_df.limit(15), media_df, run_id="a")
     n1 = write_extracted(spark, first, out)
     assert n1 == 15
-    # same rows again → zero written, no duplicates
+    written = sorted(map(tuple, spark.read.parquet(out).collect()))
+    # same rows again → zero written, no duplicates, target unchanged
     assert write_extracted(spark, first, out) == 0
+    assert sorted(map(tuple, spark.read.parquet(out).collect())) == written
     full, _ = run_extract(spark, docs_df, media_df, run_id="b")
     n2 = write_extracted(spark, full, out)
     back = spark.read.parquet(out)
@@ -42,6 +44,35 @@ def test_write_extracted_dedupes_source_batch(spark, docs_df, media_df):
     back = spark.read.parquet(out)
     assert back.count() == 5
     assert back.select("doc_id").distinct().count() == 5
+
+
+def test_write_extracted_counts_rows_in_the_write(spark, docs_df, media_df):
+    """The parquet writer counts rows with an Observation on the write
+    itself: the executed write plan carries CollectMetrics directly
+    under WriteFiles, and no copy of the batch is left persisted."""
+    out = tempfile.mkdtemp() + "/extracted"
+    jsc = spark.sparkContext._jsc
+    store = spark._jsparkSession.sharedState().statusStore()
+    rows, lineage = run_extract(spark, docs_df.limit(7), media_df, run_id="obs")
+    try:
+        lineage.collect()  # materializes the run's own media cache first
+        before = set(jsc.getPersistentRDDs().keys())
+        assert write_extracted(spark, rows, out) == 7
+        after = set(jsc.getPersistentRDDs().keys())
+    finally:
+        release_run("obs")
+    assert after <= before
+    jsc.sc().listenerBus().waitUntilEmpty()
+    n = store.executionsCount()
+    recent = store.executionsList(max(0, n - 5), 5)
+    plans = [
+        recent.apply(i).physicalPlanDescription() for i in range(recent.size())
+    ]
+    (plan,) = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p and out in p]
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    lines = [ln.strip(" +-:") for ln in final.splitlines()]
+    at = next(i for i, ln in enumerate(lines) if ln.startswith("WriteFiles"))
+    assert lines[at + 1].startswith("CollectMetrics")
 
 
 def _has_iceberg(spark) -> bool:

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from perfbench.tracing import output_names, plan_nodes
 from pero_ocr_api_spark.plans.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
@@ -59,20 +60,24 @@ def test_fair_dequeue_single_shuffle(spark):
     assert "EqualTo(o_orderstatus,O)" in f
 
 
-def test_text_path_stays_in_jvm(spark, docs_df):
-    """The X9 cleaner must compile to pure Catalyst expressions —
-    no Python evaluation nodes in the plan."""
-    from pero_ocr_api_spark.plans.extract import text_path
+def _spans(docs):
     from pyspark.sql import functions as F
 
-    spans = docs_df.select("doc_id", F.explode("spans").alias("s")).select(
+    return docs.select("doc_id", F.explode("spans").alias("s")).select(
         "doc_id",
         F.col("s.kind").alias("kind"),
         F.col("s.text").alias("text"),
         F.col("s.media_ref").alias("media_ref"),
         F.col("s.offset").alias("offset"),
     )
-    plan = text_path(spans)._jdf.queryExecution().executedPlan().toString()
+
+
+def test_text_path_stays_in_jvm(spark, docs_df):
+    """The X9 cleaner must compile to pure Catalyst expressions —
+    no Python evaluation nodes in the plan."""
+    from pero_ocr_api_spark.plans.extract import text_path
+
+    plan = text_path(_spans(docs_df))._jdf.queryExecution().executedPlan().toString()
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "PythonUDF"):
         assert marker not in plan
 
@@ -85,6 +90,68 @@ def test_extract_media_stage_partitioning(spark, docs_df, media_df):
     plan = extracted._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     assert "hashpartitioning(media_ref" in plan
+
+
+@pytest.mark.parametrize("threshold", [None, "-1"], ids=["broadcast", "sort_merge"])
+def test_media_join_moves_blobs_once(spark, docs_df, media_df, threshold):
+    """Each blob crosses one exchange: the BroadcastExchange when the
+    media table is small, one hash exchange on media_ref in the
+    sort-merge regime — never a pre-join repartition on top of it.
+    Each UDF task emits exactly one lineage row."""
+    from pero_ocr_api_spark.plans import extract
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    run_id = f"blobs_{threshold}"
+    try:
+        if threshold is not None:
+            spark.conf.set(key, threshold)
+        _, lineage = extract.run_extract(spark, docs_df, media_df, run_id=run_id)
+        n_lineage = len(lineage.collect())
+        # the lineage plan reads the cached UDF output, whose plan holds
+        # the media join
+        nodes = plan_nodes(lineage._jdf.queryExecution().executedPlan())
+    finally:
+        spark.conf.set(key, saved)
+        extract.release_run(run_id)
+    blob_exchanges = [
+        n.nodeName()
+        for n in nodes
+        if n.nodeName() in ("Exchange", "BroadcastExchange")
+        and "media_bytes" in output_names(n)
+    ]
+    joins = {n.nodeName() for n in nodes if n.nodeName().endswith("Join")}
+    if threshold is None:
+        assert joins == {"BroadcastHashJoin"}
+        assert blob_exchanges == ["BroadcastExchange"]
+    else:
+        assert joins == {"SortMergeJoin"}
+        assert blob_exchanges == ["Exchange"]
+    # one cached partition per UDF task
+    scans = [n for n in nodes if n.nodeName().startswith("InMemoryTableScan")]
+    udf_tasks = {
+        s.relation().cacheBuilder().cachedColumnBuffers().getNumPartitions()
+        for s in scans
+        if "MapInPandas" in s.relation().cachedPlan().toString()
+    }
+    assert udf_tasks == {n_lineage}
+
+
+def test_restitch_one_exchange(spark, docs_df):
+    """The stitch is one groupBy(doc_id): a single exchange keyed on
+    doc_id, fed by a map-side partial aggregate."""
+    from pero_ocr_api_spark.operators.restitch import restitch
+    from pero_ocr_api_spark.plans.extract import text_path
+
+    stitched = restitch(text_path(_spans(docs_df)))
+    nodes = plan_nodes(stitched._jdf.queryExecution().executedPlan())
+    exchanges = [n for n in nodes if n.nodeName() == "Exchange"]
+    assert len(exchanges) == 1
+    (ex,) = exchanges
+    assert ex.outputPartitioning().toString().startswith("hashpartitioning(doc_id#")
+    partial = ex.children().apply(0)
+    assert partial.nodeName().endswith("HashAggregate")
+    assert "partial_collect_list" in partial.toString().splitlines()[0]
 
 
 def test_top_ngrams_takeordered_with_partials(spark):
